@@ -61,11 +61,7 @@ object SparkEntry {
     * declarations, not in the operators.
     */
   private def spread(df: DataFrame): DataFrame =
-    df.repartition(math.min(
-      df.sparkSession.sparkContext.defaultParallelism,
-      sys.env.getOrElse("SPARK_GRAFT_SPREAD_CAP",
-        sys.props.getOrElse("graft.spread.cap",
-          String.valueOf(Int.MaxValue))).toInt))
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Build + eagerly pin several independent frames CONCURRENTLY (guide
     * §2.6 — the q_resident_parity pattern: each localCheckpoint is a

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.embed.Embedder
 import graft.core.{Keys, Serialize}
+import graft.plans.{GraftPlans, SelfPairs}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -186,8 +187,10 @@ object Clustering extends Logging {
 
   /** ε-neighbor pairs over `(id, v)` with cosine >= tau.
     *
-    * Plan selection: broadcast-matrix scan (exact, zero shuffle) while the
-    * table fits the broadcast bound; above it the default escalates to the
+    * Plan selection: the planned broadcast range join
+    * ([[graft.plans.SemanticRangeJoin]]; exact, zero shuffle, the i<j or
+    * i≠j rule applied inside the scan) while the table fits the broadcast
+    * bound; above it the default escalates to the
     * SRP-LSH bucket equi-join (candidates exact-verified at >= tau —
     * precision 1, recall < 1 near the threshold) because an O(n²) crossJoin
     * over a table that big is not a survivable plan at 100 TB. Pass
@@ -200,8 +203,8 @@ object Clustering extends Logging {
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     import graft.functions.VectorOps._
     if (VecScan.fitsBroadcast(pts, "v")) {
-      VecScan.range(pts, "id", "v", pts, "id", "v", tau,
-        excludeSelf = true, onlyUpperPairs = onlyUpperPairs)
+      GraftPlans.rangeJoinPairs(pts, "id", "v", pts, "id", "v", tau,
+        if (onlyUpperPairs) SelfPairs.Upper else SelfPairs.Exclude, keepUnmatched = false)
     } else if (!forceExact) {
       // never silent: results become approximate here, and at tau ~0.5 the
       // default 8x8 bands are far from recall 1 — surface both facts

@@ -219,7 +219,8 @@ object Pq {
     * and collected as an `m`-bytes-plus-norm code matrix (~dim/m x more
     * vectors per broadcast byte than SQ8, size-guarded below); coarse
     * scoring is a map-partitions scan over the broadcast matrix — the
-    * [[VecScan.knn]] pattern — that builds each query's LUT ONCE and then
+    * pattern of the planned kNN node ([[graft.plans.SemanticTopKJoinExec]])
+    * — that builds each query's LUT ONCE and then
     * pays `m` lookups per candidate, emitting ≤ rerankFactor·k candidate
     * rows per query; the exact rerank joins the survivors back to the
     * original vectors.

@@ -188,7 +188,8 @@ object Quantize {
     * and collected as a code matrix (1 byte/lane + one long norm — 8x more
     * vectors per broadcast byte than the double matrix, size-guarded
     * below); coarse scoring is a map-partitions scan over the broadcast
-    * matrix — the [[VecScan.knn]] pattern — that quantizes each QUERY once
+    * matrix — the pattern of the planned kNN node
+    * ([[graft.plans.SemanticTopKJoinExec]]) — that quantizes each QUERY once
     * and pays one exact integer dot per candidate, emitting
     * ≤ rerankFactor·k candidate rows per query; the rerank is an equi-join
     * on corpus id against the original vectors — no all-pairs shuffle

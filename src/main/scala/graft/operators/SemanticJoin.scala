@@ -3,6 +3,7 @@ package graft.operators
 import graft.core.{Keys, Serialize}
 import graft.embed.Embedder
 import graft.functions.VectorOps._
+import graft.plans.GraftPlans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -11,14 +12,23 @@ import org.apache.spark.sql.types.IntegerType
   * threshold range join with left-outer retention ("merge_range"), blocked
   * equi+semantic join ("merge_blocking"), and semantic rollup ("aggregate_rows").
   *
-  * Physical shape (SURVEY §4.3): broadcast the (id, vec) projection of the right
-  * side, generate candidates with a BroadcastNestedLoopJoin, score with codegen'd
-  * higher-order functions, then reduce with the partial-aggregating [[TopKAgg]] —
-  * so only ≤k rows per left key ever shuffle. Exact (matches FAISS IndexFlatIP,
-  * reference: src/linktransformer/infer.py:144-151) with deterministic tie-break
-  * (score desc, right id asc).
+  * Physical shape (SURVEY §4.3): while the right side's (id, vec) projection
+  * fits the broadcast bound, the vector joins plan the Catalyst nodes of
+  * [[graft.plans.GraftPlans]] — the right side broadcast, each left row
+  * scanned against it with zero shuffle and no per-pair rows. Above the bound
+  * they fall back to a crossJoin scored by codegen'd expressions and reduced
+  * by the partial-aggregating native top-k, so only ≤k rows per left key ever
+  * shuffle. Exact (matches FAISS IndexFlatIP, reference:
+  * src/linktransformer/infer.py:144-151) with deterministic tie-break
+  * (score desc, right id asc), bit-identical across both forms.
   */
 object SemanticJoin {
+
+  /** The crossJoin branches' input types — id as long, vector as
+    * array<double> — under the caller's column names, for the planned nodes.
+    */
+  private def idVec(df: DataFrame, id: String, vec: String): DataFrame =
+    df.select(col(id).cast("long").as(id), asDouble(col(vec)).as(vec))
 
   /** kNN join over precomputed vector columns.
     * Returns `(left_id, right_id, score, rank)`, rank 1-based best-first.
@@ -35,8 +45,8 @@ object SemanticJoin {
     // skipSizeCheck lets callers with a size guarantee by construction (e.g. a
     // ≤nCentroids centroid table) save the census aggregate job.
     if (broadcastRight && (skipSizeCheck || VecScan.fitsBroadcast(right, rightVec))) {
-      // broadcast-matrix scan: zero shuffle, no per-pair rows (SURVEY §4.3)
-      VecScan.knn(left, leftId, leftVec, right, rightId, rightVec, k, excludeSelf)
+      GraftPlans.knnJoin(idVec(left, leftId, leftVec), leftId, leftVec,
+        idVec(right, rightId, rightVec), rightId, rightVec, k, excludeSelf)
     } else {
       // shuffle path for when neither side fits a broadcast: crossJoin pairs,
       // partial-aggregating native top-k so only ≤k rows per left key shuffle
@@ -72,25 +82,25 @@ object SemanticJoin {
       excludeSelf: Boolean = false,
       keepUnmatched: Boolean = true,
       broadcastRight: Boolean = true): DataFrame = {
-    val matches =
-      if (broadcastRight && VecScan.fitsBroadcast(right, rightVec)) {
-        VecScan.range(left, leftId, leftVec, right, rightId, rightVec, tau, excludeSelf)
-      } else {
-        val l = left.select(col(leftId).cast("long").as("left_id"), asDouble(col(leftVec)).as("__lvec"))
-          .withColumn("__lnorm", norm(col("__lvec")))
-        val r = right.select(col(rightId).cast("long").as("right_id"), asDouble(col(rightVec)).as("__rvec"))
-          .withColumn("__rnorm", norm(col("__rvec")))
-        val pairs0 = l.crossJoin(r)
-        val pairs = if (excludeSelf) pairs0.filter(col("left_id") =!= col("right_id")) else pairs0
-        pairs
-          .withColumn("score",
-            cosineWithNorms(dot(col("__lvec"), col("__rvec")), col("__lnorm"), col("__rnorm")))
-          .filter(col("score") >= lit(tau))
-          .select("left_id", "right_id", "score")
-      }
-    if (!keepUnmatched) matches
-    else left.select(col(leftId).cast("long").as("left_id"))
-      .join(matches, Seq("left_id"), "left")
+    if (broadcastRight && VecScan.fitsBroadcast(right, rightVec)) {
+      GraftPlans.rangeJoin(idVec(left, leftId, leftVec), leftId, leftVec,
+        idVec(right, rightId, rightVec), rightId, rightVec, tau, excludeSelf, keepUnmatched)
+    } else {
+      val l = left.select(col(leftId).cast("long").as("left_id"), asDouble(col(leftVec)).as("__lvec"))
+        .withColumn("__lnorm", norm(col("__lvec")))
+      val r = right.select(col(rightId).cast("long").as("right_id"), asDouble(col(rightVec)).as("__rvec"))
+        .withColumn("__rnorm", norm(col("__rvec")))
+      val pairs0 = l.crossJoin(r)
+      val pairs = if (excludeSelf) pairs0.filter(col("left_id") =!= col("right_id")) else pairs0
+      val matches = pairs
+        .withColumn("score",
+          cosineWithNorms(dot(col("__lvec"), col("__rvec")), col("__lnorm"), col("__rnorm")))
+        .filter(col("score") >= lit(tau))
+        .select("left_id", "right_id", "score")
+      if (!keepUnmatched) matches
+      else left.select(col(leftId).cast("long").as("left_id"))
+        .join(matches, Seq("left_id"), "left")
+    }
   }
 
   // ---------------------------------------------------------------------------

@@ -32,16 +32,6 @@ object TextAnalysis {
     when(length(trim(text)) === 0, lit(0L))
       .otherwise(size(split(trim(text), "\\s+")).cast("long"))
 
-  /** BPE-ish subword-budget estimate: word tokens + extra for long words
-    * (a deterministic stand-in for a real tokenizer's token count).
-    */
-  def tokenEstimate(text: Column): Column =
-    tokenCount(text) +
-      aggregate(
-        split(trim(text), "\\s+"),
-        lit(0L),
-        (acc, w) => acc + (length(w).cast("long") / lit(8L)))
-
   /** Quality-score components + composite in [0,1]:
     * mean word length, punctuation ratio, uppercase ratio, stopword ratio.
     */
@@ -192,14 +182,5 @@ object TextAnalysis {
       .withColumn("chunk_n_tokens",
         least(col("__n") - col("chunk_id") * stride, lit(chunkSize)).cast("long"))
       .drop("__toks", "__n")
-  }
-
-  /** n-gram Jaccard similarity between two texts' shingle sets. */
-  def ngramJaccard(a: Column, b: Column, n: Int): Column = {
-    val sa = array_distinct(wordShingles(a, n))
-    val sb = array_distinct(wordShingles(b, n))
-    val inter = size(array_intersect(sa, sb)).cast("double")
-    val uni = size(array_union(sa, sb)).cast("double")
-    when(uni === 0, lit(0.0)).otherwise(inter / uni)
   }
 }

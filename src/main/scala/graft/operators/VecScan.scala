@@ -1,31 +1,26 @@
 package graft.operators
 
-import graft.functions.TopKBuffer
 import graft.functions.VectorOps.asDouble
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Broadcast-matrix similarity scan — the physical kernel behind the kNN and
-  * range joins when the right side fits in memory (SURVEY §4.3: "small right:
-  * broadcast right (id, vec) matrix, mapPartitions top-k per left row").
-  *
-  * Versus the crossJoin formulation this removes all per-pair row machinery:
-  * the pair space exists only as two nested primitive loops inside a partition,
-  * each left row allocates nothing but its TopK buffer, and only ≤k (or
-  * ≥τ-matching) rows are ever materialized. Scores are bit-identical to the
-  * declarative path: same `dot / (sqrt(na)·sqrt(nb))` double op order, same
-  * [-1,1] clamp, same (score desc, id asc) tie-break.
-  *
-  * Scale posture: the scan distributes over left partitions with zero shuffle;
-  * the broadcast is bounded by [[VecScan.maxBroadcastBytes]] and callers fall
-  * back to the shuffle/crossJoin plan (or IVF) above that.
+/** Shared pieces of the broadcast cosine scans: the broadcast size bound and
+  * census ([[fitsBroadcast]]), the column-major [[Mat]] the scans read, and
+  * the scalar [[dot]]/[[cosine]] they score with. The kNN and range join
+  * scans themselves are the planned nodes of [[graft.plans.GraftPlans]]
+  * ([[graft.plans.SemanticVecJoinExec]]), which
+  * [[SemanticJoin.knnJoinVec]]/[[SemanticJoin.rangeJoinVec]] and the
+  * clustering ε-scan build while the right side fits [[maxBroadcastBytes]];
+  * above it callers fall back to the shuffle/crossJoin plan (or IVF).
+  * Scores are bit-identical to the declarative path: same
+  * `dot / (sqrt(na)·sqrt(nb))` double op order, same [-1,1] clamp.
   */
 object VecScan {
 
   /** Right side must stay under this to take the broadcast path. The default
     * (256 MiB of packed doubles) leaves headroom under Spark's default
-    * `spark.driver.maxResultSize=1g`: [[collectMat]] pulls the matrix through
-    * the driver, so a bound near 1 GiB kills the job with a confusing
+    * `spark.driver.maxResultSize=1g`: the broadcast pulls the right side
+    * through the driver, so a bound near 1 GiB kills the job with a confusing
     * driver-side error instead of falling back to the shuffle plan. Tune with
     * `spark.graft.vecscan.maxBroadcastBytes` (raise it together with
     * maxResultSize / driver memory).
@@ -81,69 +76,5 @@ object VecScan {
       val d = if (r.isNullAt(1)) 1 else math.max(r.getInt(1), 1)
       n * d.toLong * 8L <= bound
     }
-  }
-
-  /** kNN scan: `(left_id, right_id, score, rank)`, rank 1-based best-first,
-    * ≤k rows per left row.
-    */
-  def knn(
-      left: DataFrame, leftId: String, leftVec: String,
-      right: DataFrame, rightId: String, rightVec: String,
-      k: Int, excludeSelf: Boolean): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    val mat = spark.sparkContext.broadcast(collectMat(right, rightId, rightVec))
-    val out = left.select(col(leftId).cast("long"), asDouble(col(leftVec)))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val m = mat.value
-        it.flatMap { case (lid, lv) =>
-          val ln = math.sqrt(dot(lv, lv))
-          val buf = new TopKBuffer(k)
-          var j = 0
-          while (j < m.ids.length) {
-            if (!(excludeSelf && m.ids(j) == lid)) {
-              buf.insert(cosine(dot(lv, m.vecs(j)), ln, m.norms(j)), m.ids(j))
-            }
-            j += 1
-          }
-          (0 until buf.n).map(r => (lid, buf.ids(r), buf.scores(r), r + 1))
-        }
-      }
-    out.toDF("left_id", "right_id", "score", "rank")
-  }
-
-  /** Range scan: matching `(left_id, right_id, score)` pairs with score ≥ τ.
-    * `onlyUpperPairs` emits i<j once (self-join edge lists for clustering).
-    */
-  def range(
-      left: DataFrame, leftId: String, leftVec: String,
-      right: DataFrame, rightId: String, rightVec: String,
-      tau: Double, excludeSelf: Boolean, onlyUpperPairs: Boolean = false): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    val mat = spark.sparkContext.broadcast(collectMat(right, rightId, rightVec))
-    val out = left.select(col(leftId).cast("long"), asDouble(col(leftVec)))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val m = mat.value
-        it.flatMap { case (lid, lv) =>
-          val ln = math.sqrt(dot(lv, lv))
-          val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          var j = 0
-          while (j < m.ids.length) {
-            val rid = m.ids(j)
-            val keep = if (onlyUpperPairs) lid < rid
-              else !(excludeSelf && rid == lid)
-            if (keep) {
-              val s = cosine(dot(lv, m.vecs(j)), ln, m.norms(j))
-              if (s >= tau) hits += ((lid, rid, s))
-            }
-            j += 1
-          }
-          hits
-        }
-      }
-    out.toDF("left_id", "right_id", "score")
   }
 }

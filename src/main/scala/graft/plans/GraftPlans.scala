@@ -27,10 +27,8 @@ object GraftPlans {
       k: Int, excludeSelf: Boolean = false): DataFrame = {
     val spark = left.sparkSession
     install(spark)
-    def proj(df: DataFrame, cols: Seq[String]): LogicalPlan =
-      Project(cols.map(UnresolvedAttribute(_)), ColumnBridge.analyzedPlan(df))
     ColumnBridge.ofRows(spark, SemanticTopKJoin(
-      proj(left, Seq(leftId, leftVec)), proj(right, Seq(rightId, rightVec)),
+      idVec(left, leftId, leftVec), idVec(right, rightId, rightVec),
       leftId, leftVec, rightId, rightVec, k, excludeSelf))
   }
 
@@ -42,15 +40,26 @@ object GraftPlans {
       left: DataFrame, leftId: String, leftVec: String,
       right: DataFrame, rightId: String, rightVec: String,
       tau: Double, excludeSelf: Boolean = false,
-      keepUnmatched: Boolean = true): DataFrame = {
+      keepUnmatched: Boolean = true): DataFrame =
+    rangeJoinPairs(left, leftId, leftVec, right, rightId, rightVec,
+      tau, SelfPairs(excludeSelf), keepUnmatched)
+
+  /** [[rangeJoin]] under any [[SelfPairs]] rule, including the
+    * `left_id < right_id` one that self-join edge lists use.
+    */
+  private[graft] def rangeJoinPairs(
+      left: DataFrame, leftId: String, leftVec: String,
+      right: DataFrame, rightId: String, rightVec: String,
+      tau: Double, selfPairs: SelfPairs, keepUnmatched: Boolean): DataFrame = {
     val spark = left.sparkSession
     install(spark)
-    def proj(df: DataFrame, cols: Seq[String]): LogicalPlan =
-      Project(cols.map(UnresolvedAttribute(_)), ColumnBridge.analyzedPlan(df))
     ColumnBridge.ofRows(spark, SemanticRangeJoin(
-      proj(left, Seq(leftId, leftVec)), proj(right, Seq(rightId, rightVec)),
-      leftId, leftVec, rightId, rightVec, tau, excludeSelf, keepUnmatched))
+      idVec(left, leftId, leftVec), idVec(right, rightId, rightVec),
+      leftId, leftVec, rightId, rightVec, tau, selfPairs, keepUnmatched))
   }
+
+  private def idVec(df: DataFrame, id: String, vec: String): LogicalPlan =
+    Project(Seq(UnresolvedAttribute(id), UnresolvedAttribute(vec)), ColumnBridge.analyzedPlan(df))
 
   private def str(e: Expression, what: String): String = e match {
     case Literal(s: UTF8String, _) => s.toString
@@ -117,7 +126,7 @@ object GraftPlans {
     val excludeSelf = args.length > 7 && bool(args(7), "excludeSelf")
     val keepUnmatched = args.length <= 8 || bool(args(8), "keepUnmatched")
     SemanticRangeJoin(rel(lt, Seq(lid, lvec)), rel(rt, Seq(rid, rvec)),
-      lid, lvec, rid, rvec, tau, excludeSelf, keepUnmatched)
+      lid, lvec, rid, rvec, tau, SelfPairs(excludeSelf), keepUnmatched)
   }
 
   /** `graft_fuzzy_join('l_tbl','r_tbl','lid','lstr','rid','rstr', maxDist[, maxLen])`

@@ -1,13 +1,34 @@
 package graft.plans
 
 import graft.operators.VecScan
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
+
+/** The range join's rule on pair ids: keep every pair, drop those with
+  * `left_id == right_id` (a self-join without self-pairs), or keep only
+  * `left_id < right_id` (each unordered pair of a self-join once — the edge
+  * lists of [[graft.operators.Clustering]]). The rule lives in the scan so
+  * that no pair it drops is ever scored.
+  */
+sealed abstract class SelfPairs extends Serializable {
+  final def keeps(lid: Long, rid: Long): Boolean = this match {
+    case SelfPairs.Keep => true
+    case SelfPairs.Exclude => lid != rid
+    case SelfPairs.Upper => lid < rid
+  }
+}
+
+object SelfPairs {
+  case object Keep extends SelfPairs
+  case object Exclude extends SelfPairs
+  case object Upper extends SelfPairs
+
+  /** The rule the public `excludeSelf` flag names. */
+  def apply(excludeSelf: Boolean): SelfPairs = if (excludeSelf) Exclude else Keep
+}
 
 /** Logical plan node for the similarity range join (θ-join on cosine ≥ τ) —
   * the planned form of the reference's second-most-used merge
@@ -20,8 +41,8 @@ import org.apache.spark.sql.types._
   * `keepUnmatched` (the reference's left-outer contract) every left id is
   * retained — unmatched ones with null right_id/score, so those two
   * attributes are nullable exactly when `keepUnmatched` is set. Scores are
-  * bit-identical to [[graft.operators.SemanticJoin.rangeJoinVec]] (same
-  * double op order + clamp via [[VecScan]]).
+  * bit-identical to the crossJoin form of
+  * [[graft.operators.SemanticJoin.rangeJoinVec]] (see [[SemanticVecJoinExec]]).
   *
   * Output attributes are a constructor field for the same reason as
   * [[SemanticTopKJoin]]: optimizer copies must preserve expression ids.
@@ -34,7 +55,7 @@ case class SemanticRangeJoin(
     rightIdCol: String,
     rightVecCol: String,
     tau: Double,
-    excludeSelf: Boolean,
+    selfPairs: SelfPairs,
     keepUnmatched: Boolean,
     output: Seq[Attribute])
   extends SemanticVecJoin {
@@ -49,9 +70,9 @@ object SemanticRangeJoin {
       left: LogicalPlan, right: LogicalPlan,
       leftIdCol: String, leftVecCol: String,
       rightIdCol: String, rightVecCol: String,
-      tau: Double, excludeSelf: Boolean, keepUnmatched: Boolean): SemanticRangeJoin =
+      tau: Double, selfPairs: SelfPairs, keepUnmatched: Boolean): SemanticRangeJoin =
     SemanticRangeJoin(left, right, leftIdCol, leftVecCol, rightIdCol, rightVecCol,
-      tau, excludeSelf, keepUnmatched, freshOutput(keepUnmatched))
+      tau, selfPairs, keepUnmatched, freshOutput(keepUnmatched))
 
   def freshOutput(keepUnmatched: Boolean): Seq[Attribute] = Seq(
     AttributeReference("left_id", LongType, nullable = false)(),
@@ -59,14 +80,12 @@ object SemanticRangeJoin {
     AttributeReference("score", DoubleType, nullable = keepUnmatched)())
 }
 
-/** Physical range join: broadcast right (via the same
-  * `BroadcastDistribution` + [[MatCache]] machinery as
-  * [[SemanticTopKJoinExec]]), stream left partitions, emit every pair with
-  * cosine ≥ τ — plus, under `keepUnmatched`, a null-extended row for each
-  * left row with no match (left-outer semantics with zero extra passes:
-  * matched-ness is known the moment the row's scan finishes). Zero shuffle;
-  * output size is data-dependent (τ controls selectivity), never
-  * materialized as a full pair matrix.
+/** Physical range join: the broadcast scan of [[SemanticVecJoinExec]]
+  * emitting every pair with cosine ≥ τ — plus, under `keepUnmatched`, a
+  * null-extended row for each left row with no match, a null vector
+  * included (left-outer semantics with zero extra passes: matched-ness is
+  * known the moment the row's scan finishes). Output size is data-dependent
+  * (τ controls selectivity), never materialized as a full pair matrix.
   */
 case class SemanticRangeJoinExec(
     leftIdCol: String,
@@ -74,72 +93,39 @@ case class SemanticRangeJoinExec(
     rightIdCol: String,
     rightVecCol: String,
     tau: Double,
-    excludeSelf: Boolean,
+    selfPairs: SelfPairs,
     keepUnmatched: Boolean,
     output: Seq[Attribute],
     left: SparkPlan,
     right: SparkPlan)
-  extends SparkPlan with BinaryExecNode {
+  extends SemanticVecJoinExec {
 
-  private def ordinalOf(child: SparkPlan, name: String): Int = {
-    val i = child.output.indexWhere(a => conf.resolver(a.name, name))
-    require(i >= 0, s"column $name not found in ${child.output.map(_.name).mkString(", ")}")
-    i
-  }
-
-  private def elemType(child: SparkPlan, ord: Int): DataType =
-    child.output(ord).dataType.asInstanceOf[ArrayType].elementType
-
-  override def requiredChildDistribution: Seq[Distribution] = Seq(
-    UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val rowsBc = right.executeBroadcast[Array[InternalRow]]()
-    val rIdOrd = ordinalOf(right, rightIdCol)
-    val rVecOrd = ordinalOf(right, rightVecCol)
-    val rIdType = right.output(rIdOrd).dataType
-    val rElem = elemType(right, rVecOrd)
-    val lIdOrd = ordinalOf(left, leftIdCol)
-    val lVecOrd = ordinalOf(left, leftVecCol)
-    val lIdType = left.output(lIdOrd).dataType
-    val lElem = elemType(left, lVecOrd)
-    val tauLoc = tau
-    val exSelf = excludeSelf
-    val outer = keepUnmatched
-    val outTypes = output.map(_.dataType)
-    left.execute().mapPartitions({ it =>
-      val m = MatCache.get(rowsBc.value, rIdOrd, rIdType, rVecOrd, rElem)
-      val proj = UnsafeProjection.create(outTypes.toArray)
-      val scratch = new GenericInternalRow(3)
-      it.flatMap { lrow =>
-        if (lrow.isNullAt(lIdOrd) || lrow.isNullAt(lVecOrd)) Iterator.empty
-        else {
-          val lid = RowVec.getId(lrow, lIdOrd, lIdType)
-          val lv = RowVec.getVec(lrow, lVecOrd, lElem)
-          val ln = math.sqrt(VecScan.dot(lv, lv))
-          val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-          var j = 0
-          while (j < m.ids.length) {
-            if (!(exSelf && m.ids(j) == lid)) {
-              val s = VecScan.cosine(VecScan.dot(lv, m.vecs(j)), ln, m.norms(j))
-              if (s >= tauLoc) hits += ((m.ids(j), s))
-            }
-            j += 1
+  override protected def scanner(m: VecScan.Mat): (Long, Array[Double]) => Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
+    val scratch = new GenericInternalRow(3)
+    def emit(lid: Long, rid: Any, score: Any): InternalRow = {
+      scratch.update(0, lid)
+      scratch.update(1, rid)
+      scratch.update(2, score)
+      proj(scratch)
+    }
+    (lid, lv) => {
+      val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+      if (lv != null) {
+        val ln = math.sqrt(VecScan.dot(lv, lv))
+        var j = 0
+        while (j < m.ids.length) {
+          val rid = m.ids(j)
+          if (selfPairs.keeps(lid, rid)) {
+            val s = VecScan.cosine(VecScan.dot(lv, m.vecs(j)), ln, m.norms(j))
+            if (s >= tau) hits += ((rid, s))
           }
-          if (hits.isEmpty && outer) {
-            scratch.update(0, lid)
-            scratch.update(1, null)
-            scratch.update(2, null)
-            Iterator.single(proj(scratch))
-          } else hits.iterator.map { case (rid, s) =>
-            scratch.update(0, lid)
-            scratch.update(1, rid)
-            scratch.update(2, s)
-            proj(scratch)
-          }
+          j += 1
         }
       }
-    }, preservesPartitioning = true)
+      if (hits.isEmpty && keepUnmatched) Iterator.single(emit(lid, null, null))
+      else hits.iterator.map { case (rid, s) => emit(lid, rid, s) }
+    }
   }
 
   override protected def withNewChildrenInternal(

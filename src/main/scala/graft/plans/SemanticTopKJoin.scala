@@ -1,38 +1,15 @@
 package graft.plans
 
 import graft.operators.VecScan
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.BroadcastMode
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.types._
 
-/** Logical plan node for the semantic top-k (cosine kNN) join — the engine's
-  * core operator lifted to a first-class Catalyst citizen (SURVEY §4.2's
-  * optional SQL-surface item). The node is declarative: it names the id/vec
-  * columns of each side and `k`; HOW it runs (broadcast side, kernel, rank
-  * materialization) is decided at planning by [[GraftStrategy]], exactly like
-  * Spark's own Join → {Broadcast,SortMerge,Hash}JoinExec split.
-  *
-  * Column bindings are by NAME (resolved against each child's own output
-  * independently), not by `Expression`: a semantic self-join reads the same
-  * table on both sides, where attribute-based bindings would collide on
-  * duplicate expression ids — the exact hazard `DeduplicateRelations` exists
-  * to patch for Spark's built-in binary nodes, which does not know about this
-  * one. By-name binding per side makes the ambiguity unrepresentable.
-  *
-  * Output is `(left_id long, right_id long, score double, rank int)` — the
-  * same contract as [[graft.operators.SemanticJoin.knnJoinVec]], rank 1-based
-  * best-first, ties broken (score desc, right_id asc), scores bit-identical
-  * to the DataFrame path (same double op order + clamp as
-  * [[graft.operators.VecScan]]).
-  *
-  * The output attributes are a constructor field (with fresh ids by default)
-  * so that optimizer copies — `withNewChildrenInternal`, rule rewrites —
-  * preserve expression ids; regenerating them per copy would orphan every
-  * reference above this node.
-  */
 /** Shared by-name column binding + validation for the semantic vector join
   * family ([[SemanticTopKJoin]], [[SemanticRangeJoin]]): each node names the
   * id/vec columns of each side and resolves them against that child's own
@@ -73,6 +50,85 @@ trait SemanticVecJoin extends BinaryNode {
     find(right, rightVecCol).exists(a => vecOk(a.dataType))
 }
 
+/** The physical form both [[SemanticVecJoin]] members share: the right
+  * child is required as a `BroadcastDistribution`, so Spark's own
+  * `EnsureRequirements` inserts a `BroadcastExchangeExec` (size guards,
+  * reuse across identical subtrees and AQE handling come with it). The
+  * broadcast rows are unpacked into the scan-ready [[VecScan.Mat]] once per
+  * executor ([[MatCache]]), and each left partition streams its rows
+  * through the member's per-row loop, [[scanner]]: zero shuffle, no per-pair
+  * rows. Scores use [[VecScan.dot]]/[[VecScan.cosine]], the double op order
+  * and clamp of the declarative crossJoin path, so both are bit-identical.
+  */
+trait SemanticVecJoinExec extends BinaryExecNode {
+  def leftIdCol: String
+  def leftVecCol: String
+  def rightIdCol: String
+  def rightVecCol: String
+
+  /** The per-left-row loop over the broadcast matrix `m`, built once per
+    * partition. It gets each left row's id and vector; the vector is null
+    * when the row's is. Rows with a null id never reach it.
+    */
+  protected def scanner(m: VecScan.Mat): (Long, Array[Double]) => Iterator[InternalRow]
+
+  override def requiredChildDistribution: Seq[Distribution] = Seq(
+    UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
+
+  private def ordinalOf(child: SparkPlan, name: String): Int = {
+    val i = child.output.indexWhere(a => conf.resolver(a.name, name))
+    require(i >= 0, s"column $name not found in ${child.output.map(_.name).mkString(", ")}")
+    i
+  }
+
+  private def elemType(child: SparkPlan, ord: Int): DataType =
+    child.output(ord).dataType.asInstanceOf[ArrayType].elementType
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val rowsBc = right.executeBroadcast[Array[InternalRow]]()
+    val rIdOrd = ordinalOf(right, rightIdCol)
+    val rVecOrd = ordinalOf(right, rightVecCol)
+    val rIdType = right.output(rIdOrd).dataType
+    val rElem = elemType(right, rVecOrd)
+    val lIdOrd = ordinalOf(left, leftIdCol)
+    val lVecOrd = ordinalOf(left, leftVecCol)
+    val lIdType = left.output(lIdOrd).dataType
+    val lElem = elemType(left, lVecOrd)
+    left.execute().mapPartitions({ it =>
+      val scan = scanner(MatCache.get(rowsBc.value, rIdOrd, rIdType, rVecOrd, rElem))
+      it.flatMap { lrow =>
+        if (lrow.isNullAt(lIdOrd)) Iterator.empty
+        else scan(RowVec.getId(lrow, lIdOrd, lIdType),
+          if (lrow.isNullAt(lVecOrd)) null else RowVec.getVec(lrow, lVecOrd, lElem))
+      }
+    }, preservesPartitioning = true)
+  }
+}
+
+/** Logical plan node for the semantic top-k (cosine kNN) join — the engine's
+  * core operator lifted to a first-class Catalyst citizen (SURVEY §4.2's
+  * optional SQL-surface item). The node is declarative: it names the id/vec
+  * columns of each side and `k`; HOW it runs (broadcast side, kernel, rank
+  * materialization) is decided at planning by [[GraftStrategy]], exactly like
+  * Spark's own Join → {Broadcast,SortMerge,Hash}JoinExec split.
+  *
+  * Column bindings are by NAME (resolved against each child's own output
+  * independently), not by `Expression`: a semantic self-join reads the same
+  * table on both sides, where attribute-based bindings would collide on
+  * duplicate expression ids — the exact hazard `DeduplicateRelations` exists
+  * to patch for Spark's built-in binary nodes, which does not know about this
+  * one. By-name binding per side makes the ambiguity unrepresentable.
+  *
+  * Output is `(left_id long, right_id long, score double, rank int)` — the
+  * same contract as [[graft.operators.SemanticJoin.knnJoinVec]], rank 1-based
+  * best-first, ties broken (score desc, right_id asc), scores bit-identical
+  * to its crossJoin form (see [[SemanticVecJoinExec]]).
+  *
+  * The output attributes are a constructor field (with fresh ids by default)
+  * so that optimizer copies — `withNewChildrenInternal`, rule rewrites —
+  * preserve expression ids; regenerating them per copy would orphan every
+  * reference above this node.
+  */
 case class SemanticTopKJoin(
     left: LogicalPlan,
     right: LogicalPlan,
@@ -112,10 +168,16 @@ object SemanticTopKJoin {
   * at the exchange), so the rows travel in identity form and the scan-ready
   * matrix is built ONCE per executor JVM here — keyed weakly on the broadcast
   * array instance, so the cache entry dies with the broadcast block instead
-  * of pinning a second copy for the life of the executor.
+  * of pinning a second copy for the life of the executor. The matrix itself
+  * is held weakly too: the scans using it hold it strongly, and a
+  * `WeakHashMap` keeps a dead key's value until its next access, which left
+  * the last broadcasts' matrices live long after their broadcasts were
+  * freed. A collection between two non-overlapping tasks of one broadcast
+  * costs a second unpack.
   */
 private[plans] object MatCache {
-  private val cache = new java.util.WeakHashMap[AnyRef, VecScan.Mat]
+  private val cache =
+    new java.util.WeakHashMap[AnyRef, java.lang.ref.WeakReference[VecScan.Mat]]
 
   // One lock for the whole cache, not per broadcast-array key: WeakHashMap
   // mutates internally even on get() (stale-entry expunge), so two tasks
@@ -125,7 +187,8 @@ private[plans] object MatCache {
   // executor and a hit is a hash probe.
   def get(rows: Array[InternalRow], idOrd: Int, idType: DataType,
       vecOrd: Int, vecElemType: DataType): VecScan.Mat = cache.synchronized {
-    val hit = cache.get(rows)
+    val ref = cache.get(rows)
+    val hit = if (ref == null) null else ref.get
     if (hit != null) hit
     else {
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -140,13 +203,13 @@ private[plans] object MatCache {
       var i = 0
       while (i < norms.length) { norms(i) = math.sqrt(VecScan.dot(vecs(i), vecs(i))); i += 1 }
       val mat = VecScan.Mat(ids.toArray, vecs.toArray, norms)
-      cache.put(rows, mat)
+      cache.put(rows, new java.lang.ref.WeakReference(mat))
       mat
     }
   }
 }
 
-/** Shared InternalRow → primitive extraction for the planned operator. */
+/** Shared InternalRow → primitive extraction for the planned operators. */
 private[plans] object RowVec {
   def getId(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
     case LongType => r.getLong(ord)

@@ -2,28 +2,21 @@ package graft.plans
 
 import graft.functions.TopKBuffer
 import graft.operators.VecScan
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types._
 
-/** Physical semantic top-k join: declares `BroadcastDistribution` on the
-  * right child, so Spark's own `EnsureRequirements` inserts a
-  * `BroadcastExchangeExec` — the exchange brings its size guards, reuse
-  * across identical subtrees, and AQE handling for free. The broadcast rows
-  * are unpacked into the scan-ready [[VecScan.Mat]] once per executor
-  * ([[MatCache]]); each left partition then streams rows through the same
-  * TopKBuffer kernel as [[VecScan.knn]]: zero shuffle, ≤k output rows per
-  * left row, no per-pair row materialization.
+/** Physical semantic top-k join: the broadcast scan of
+  * [[SemanticVecJoinExec]] with a TopKBuffer per left row — ≤k output rows
+  * per left row, ties broken (score desc, right_id asc).
   *
-  * Scale posture: identical to the DataFrame broadcast path — the right side
-  * must fit a broadcast (enforced by the exchange), the left side streams
-  * with full scan parallelism. For an over-broadcast right side use the
-  * DataFrame API ([[graft.operators.SemanticJoin.knnJoinVec]]), which falls
-  * back to the shuffled crossJoin + partial-agg top-k plan automatically.
+  * Scale posture: the right side must fit a broadcast (enforced by the
+  * exchange), the left side streams with full scan parallelism. For an
+  * over-broadcast right side use the DataFrame API
+  * ([[graft.operators.SemanticJoin.knnJoinVec]]), which plans this node
+  * while the right side fits and falls back to the shuffled crossJoin +
+  * partial-agg top-k plan above that.
   */
 case class SemanticTopKJoinExec(
     leftIdCol: String,
@@ -35,67 +28,31 @@ case class SemanticTopKJoinExec(
     output: Seq[Attribute],
     left: SparkPlan,
     right: SparkPlan)
-  extends SparkPlan with BinaryExecNode {
+  extends SemanticVecJoinExec {
 
-  private def ordinalOf(child: SparkPlan, name: String): Int = {
-    val i = child.output.indexWhere(a => conf.resolver(a.name, name))
-    require(i >= 0, s"column $name not found in ${child.output.map(_.name).mkString(", ")}")
-    i
-  }
-
-  private lazy val rightIdOrd = ordinalOf(right, rightIdCol)
-  private lazy val rightVecOrd = ordinalOf(right, rightVecCol)
-  private lazy val leftIdOrd = ordinalOf(left, leftIdCol)
-  private lazy val leftVecOrd = ordinalOf(left, leftVecCol)
-
-  private def elemType(child: SparkPlan, ord: Int): DataType =
-    child.output(ord).dataType.asInstanceOf[ArrayType].elementType
-
-  override def requiredChildDistribution: Seq[Distribution] = Seq(
-    UnspecifiedDistribution,
-    BroadcastDistribution(org.apache.spark.sql.catalyst.plans.physical.IdentityBroadcastMode))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val rowsBc = right.executeBroadcast[Array[InternalRow]]()
-    val rIdOrd = rightIdOrd
-    val rVecOrd = rightVecOrd
-    val rIdType = right.output(rIdOrd).dataType
-    val rElem = elemType(right, rVecOrd)
-    val lIdOrd = leftIdOrd
-    val lVecOrd = leftVecOrd
-    val lIdType = left.output(lIdOrd).dataType
-    val lElem = elemType(left, lVecOrd)
-    val kLoc = k
-    val exSelf = excludeSelf
-    val outTypes = output.map(_.dataType)
-    left.execute().mapPartitions({ it =>
-      val m = MatCache.get(rowsBc.value, rIdOrd, rIdType, rVecOrd, rElem)
-      val proj = UnsafeProjection.create(outTypes.toArray)
-      val scratch = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
-      it.flatMap { lrow =>
-        if (lrow.isNullAt(lIdOrd) || lrow.isNullAt(lVecOrd)) Iterator.empty
-        else {
-          val lid = RowVec.getId(lrow, lIdOrd, lIdType)
-          val lv = RowVec.getVec(lrow, lVecOrd, lElem)
-          val ln = math.sqrt(VecScan.dot(lv, lv))
-          val buf = new TopKBuffer(kLoc)
-          var j = 0
-          while (j < m.ids.length) {
-            if (!(exSelf && m.ids(j) == lid)) {
-              buf.insert(VecScan.cosine(VecScan.dot(lv, m.vecs(j)), ln, m.norms(j)), m.ids(j))
-            }
-            j += 1
+  override protected def scanner(m: VecScan.Mat): (Long, Array[Double]) => Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
+    val scratch = new GenericInternalRow(4)
+    (lid, lv) =>
+      if (lv == null) Iterator.empty
+      else {
+        val ln = math.sqrt(VecScan.dot(lv, lv))
+        val buf = new TopKBuffer(k)
+        var j = 0
+        while (j < m.ids.length) {
+          if (!(excludeSelf && m.ids(j) == lid)) {
+            buf.insert(VecScan.cosine(VecScan.dot(lv, m.vecs(j)), ln, m.norms(j)), m.ids(j))
           }
-          (0 until buf.n).iterator.map { r =>
-            scratch.update(0, lid)
-            scratch.update(1, buf.ids(r))
-            scratch.update(2, buf.scores(r))
-            scratch.update(3, r + 1)
-            proj(scratch)
-          }
+          j += 1
+        }
+        (0 until buf.n).iterator.map { r =>
+          scratch.update(0, lid)
+          scratch.update(1, buf.ids(r))
+          scratch.update(2, buf.scores(r))
+          scratch.update(3, r + 1)
+          proj(scratch)
         }
       }
-    }, preservesPartitioning = true)
   }
 
   override protected def withNewChildrenInternal(
@@ -116,7 +73,7 @@ object GraftStrategy extends SparkStrategy {
     case j: SemanticRangeJoin =>
       SemanticRangeJoinExec(
         j.leftIdCol, j.leftVecCol, j.rightIdCol, j.rightVecCol,
-        j.tau, j.excludeSelf, j.keepUnmatched, j.output,
+        j.tau, j.selfPairs, j.keepUnmatched, j.output,
         planLater(j.left), planLater(j.right)) :: Nil
     case _ => Nil
   }

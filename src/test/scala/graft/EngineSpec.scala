@@ -61,17 +61,6 @@ class EngineSpec extends AnyFunSuite {
 
   // --- TopK -----------------------------------------------------------------
 
-  test("TopKAgg keeps k best with (score desc, id asc) tie-break") {
-    val agg = new TopKAgg(2)
-    val items = Seq(Scored(0.5, 7), Scored(0.9, 3), Scored(0.9, 1), Scored(0.1, 2))
-    val out = items.foldLeft(agg.zero)(agg.reduce)
-    assert(out == Seq(Scored(0.9, 1), Scored(0.9, 3)))
-    // merge path agrees with reduce path
-    val (l, r) = items.splitAt(2)
-    val merged = agg.merge(l.foldLeft(agg.zero)(agg.reduce), r.foldLeft(agg.zero)(agg.reduce))
-    assert(merged == out)
-  }
-
   test("topKPayload selects entry-for-entry like topK and carries the payload") {
     import spark.implicits._
     // adversarial stream: duplicate scores (id tie-break), payload unrelated

@@ -35,8 +35,9 @@ class PlansSpec extends AnyFunSuite {
 
   test("planned knn join is bit-identical to knnJoinVec") {
     val e = vecs(120)
+    // the partitioned form: under budget knnJoinVec plans the node itself
     val a = collectSorted(SemanticJoin.knnJoinVec(e, "vec_id", "embedding",
-      e, "vec_id", "embedding", k = 3, excludeSelf = true))
+      e, "vec_id", "embedding", k = 3, excludeSelf = true, broadcastRight = false))
     val b = collectSorted(GraftPlans.knnJoin(e, "vec_id", "embedding",
       e, "vec_id", "embedding", k = 3, excludeSelf = true))
     assert(a.size == b.size && a.size == 360)
@@ -54,6 +55,10 @@ class PlansSpec extends AnyFunSuite {
     assert(phys.contains("SemanticTopKJoin"), phys)
     assert(phys.contains("BroadcastExchange"), phys)
     assert(!phys.contains("ShuffleExchange"), phys)
+    // the DataFrame API plans the same node while the right side fits
+    val api = SemanticJoin.knnJoinVec(e, "vec_id", "embedding", e, "vec_id", "embedding", k = 2)
+      .queryExecution.executedPlan.toString
+    assert(api.contains("SemanticTopKJoin") && api.contains("BroadcastExchange"), api)
   }
 
   test("SQL table function graft_knn_join over temp views") {
@@ -64,7 +69,7 @@ class PlansSpec extends AnyFunSuite {
       """SELECT * FROM graft_knn_join('plans_spec_emb', 'plans_spec_emb',
         |  'vec_id', 'embedding', 'vec_id', 'embedding', 3, true)""".stripMargin)
     val direct = SemanticJoin.knnJoinVec(e, "vec_id", "embedding",
-      e, "vec_id", "embedding", k = 3, excludeSelf = true)
+      e, "vec_id", "embedding", k = 3, excludeSelf = true, broadcastRight = false)
     assert(collectSorted(viaSql) == collectSorted(direct))
   }
 
@@ -83,7 +88,8 @@ class PlansSpec extends AnyFunSuite {
       s"expected pushed filter below join:\n$opt")
     // and the result is the filtered subset of the unpushed result
     val expected = collectSorted(SemanticJoin.knnJoinVec(e, "vec_id", "embedding",
-        e, "vec_id", "embedding", k = 2, excludeSelf = true).filter(col("left_id") < 10))
+        e, "vec_id", "embedding", k = 2, excludeSelf = true, broadcastRight = false)
+      .filter(col("left_id") < 10))
     assert(collectSorted(planned) == expected)
   }
 
@@ -132,15 +138,20 @@ class PlansSpec extends AnyFunSuite {
     import spark.implicits._
     // the sin-family vectors alias at lag ~9 (cos > 0.999), so matches exist
     // at tau = 0.98; the lone axis vector can reach at most ~0.5 cosine with
-    // any of them -> guaranteed unmatched, exercising the null-extension path
+    // any of them -> guaranteed unmatched, exercising the null-extension path;
+    // a null vector is unmatched too, and the left-outer contract keeps its id
     val e = vecs(120).unionByName(
-      Seq((999L, Array.tabulate(8)(d => if (d == 0) 1f else 0f))).toDF("vec_id", "embedding"))
+      Seq((999L, Array.tabulate(8)(d => if (d == 0) 1f else 0f)), (998L, null: Array[Float]))
+        .toDF("vec_id", "embedding"))
+    // the partitioned form: under budget rangeJoinVec plans the node itself
     val a = collectRange(SemanticJoin.rangeJoinVec(e, "vec_id", "embedding",
-      e, "vec_id", "embedding", tau = 0.98, excludeSelf = true, keepUnmatched = true))
+      e, "vec_id", "embedding", tau = 0.98, excludeSelf = true, keepUnmatched = true,
+      broadcastRight = false))
     val b = collectRange(GraftPlans.rangeJoin(e, "vec_id", "embedding",
       e, "vec_id", "embedding", tau = 0.98, excludeSelf = true, keepUnmatched = true))
     assert(a.size == b.size)
     assert(a.exists(_._2.isEmpty), "fixture should produce unmatched left rows")
+    assert(a.contains((998L, None, None)), "the null-vector row should be null-extended")
     assert(a.exists(_._2.isDefined), "fixture should produce matched pairs")
     a.zip(b).foreach { case (x, y) =>
       assert(x._1 == y._1 && x._2 == y._2)
@@ -161,6 +172,10 @@ class PlansSpec extends AnyFunSuite {
     assert(phys.contains("SemanticRangeJoin"), phys)
     assert(phys.contains("BroadcastExchange"), phys)
     assert(!phys.contains("ShuffleExchange"), phys)
+    val api = SemanticJoin.rangeJoinVec(e, "vec_id", "embedding", e, "vec_id", "embedding",
+        tau = 0.5, excludeSelf = true)
+      .queryExecution.executedPlan.toString
+    assert(api.contains("SemanticRangeJoin") && api.contains("BroadcastExchange"), api)
     e.createOrReplaceTempView("plans_spec_range")
     GraftPlans.install(spark)
     // 0.5 parses as a DECIMAL literal — the builder must accept it
