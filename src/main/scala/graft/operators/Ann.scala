@@ -220,10 +220,14 @@ object Ann {
     val cents =
       if (refineRounds <= 0) cents0.localCheckpoint(true)
       else refineCentroids(corpus, cId, cVec, cents0, refineRounds, refineFraction, seed)
+    // pinned lazily: the centroids broadcast once, here, and the first
+    // action over the cells (writeLayout's count) runs the 1-NN scan for
+    // every later one, instead of each action re-running scan and broadcast
     val assign = SemanticJoin.knnJoinVec(
       corpus, cId, cVec,
       cents, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
       .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
+      .localCheckpoint(false)
     val cells = corpus
       .select(col(cId).cast("long").as("corpus_id"), asDouble(col(cVec)).as("cv"))
       .join(assign, "corpus_id")
@@ -341,11 +345,14 @@ object Ann {
     // to drop wholesale and rewrite
     if (fs.exists(batchDir)) fs.delete(batchDir, true)
     // frozen-centroid assignment: the same broadcast 1-NN kernel the build
-    // used, against the index's OWN centroid table
+    // used, against the index's OWN centroid table; pinned lazily like the
+    // build's, so the count and the write below share one scan and one
+    // broadcast
     val assign = SemanticJoin.knnJoinVec(
       batch, idCol, vecCol,
       idx.centroids, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
       .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
+      .localCheckpoint(false)
     val cells = batch
       .select(col(idCol).cast("long").as("corpus_id"), asDouble(col(vecCol)).as("cv"))
       .join(assign, "corpus_id")

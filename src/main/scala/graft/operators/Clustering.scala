@@ -197,7 +197,7 @@ object Clustering extends Logging {
     * `forceExact=true` to keep the exact crossJoin regardless (small
     * over-bound tables where exactness matters more than wall-clock).
     */
-  private def rangePairs(
+  private[operators] def rangePairs(
       pts: DataFrame, tau: Double, onlyUpperPairs: Boolean,
       forceExact: Boolean = false,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {

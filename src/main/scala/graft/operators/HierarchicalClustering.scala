@@ -427,7 +427,8 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
     *  1. core distance = 1 − rank-k cosine via [[SemanticJoin.knnJoinVec]]
     *     (self included, like the hdbscan library) — broadcast-matrix scan
     *     below the byte bound, bounded shuffle top-k above it;
-    *  2. candidate edges: complete graph (`rangeJoinVec`, tau=−1) while
+    *  2. candidate edges: complete graph (`Clustering.rangePairs`, i<j
+    *     inside the scan, tau=−1) while
     *     n ≤ `exactPairBound`, else SRP-LSH bucket collisions
     *     ([[Ann.srpCandidatePairs]]) with a logged escalation warning —
     *     the MST over a candidate subgraph is approximate exactly where the
@@ -483,9 +484,7 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
     val exact = n <= exactPairBound
     val cand0 =
       if (exact)
-        SemanticJoin.rangeJoinVec(pts, "id", "v", pts, "id", "v",
-            tau = -1.0, excludeSelf = true, keepUnmatched = false)
-          .filter(col("left_id") < col("right_id"))
+        Clustering.rangePairs(pts, tau = -1.0, onlyUpperPairs = true, forceExact = true)
           .select(col("left_id").as("a"), col("right_id").as("b"), col("score"))
       else {
         logWarning(s"hdbscanDistributed: n=$n exceeds exactPairBound=$exactPairBound; " +
