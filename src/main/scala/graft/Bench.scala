@@ -78,40 +78,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Spark's 128-key default turns every collect_list/typed aggregate with
-      // >128 groups per partition into a SORT-based aggregate (TimSort showed
-      // up in bm25's score-fold profile); spilling still bounds memory at the
-      // raised threshold, so hash aggregation stays hash
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      // size file splits for the deployment: at production scale the 128 MB
-      // default yields full scan parallelism, but bench-scale parquet is
-      // 1-25 MB per table — one task per scan on a 32-core box without this
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      // AQE coalesces post-shuffle partitions by BYTES (1 MB floor by
-      // default), but this engine's hot stages are CPU-dense per byte —
-      // 5000 doc vectors coalesce to 2 partitions and a 25M-pair cosine
-      // scan runs on 2 of 32 cores. A 64k floor keeps those stages
-      // parallel at bench scale; production data clears the 1 MB floor
-      // naturally, so this is the same small-input calibration as
-      // maxPartitionBytes above (judge-verified r5 on a quiet box: q_bm25
-      // 2.19→1.63 s, q_dedup_rows_docs 2.27→1.53 s; the committed BENCH_r05
-      // showed different absolute numbers because that snapshot was taken
-      // under external box contention — the reason the r6 loop below
-      // measures and re-runs around contention)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm up codegen, shuffle machinery, and the parquet reader once so the
-    // first timed query measures steady-state execution, not JVM startup
-    spark.range(1000000).groupBy((org.apache.spark.sql.functions.col("id") % 10))
-      .count().collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
+    GraftSession.warm(spark, sfDir)
     // median of `iters` CLEAN runs per query (default 3): unchanged-code
     // queries jittered up to 2.4x round-over-round on single runs (judge r3),
     // which buried real regressions in noise
@@ -184,7 +153,7 @@ object Bench {
         val legacyPrior = new java.io.File(repoDir, "BENCH_PRIOR.json")
         val srcFile: Option[java.io.File] =
           Seq(new java.io.File(detailPath)).find(_.exists())
-            .orElse(if (cpus == "32" && legacyPrior.exists()) Some(legacyPrior) else None)
+            .orElse(if (cpus == 32 && legacyPrior.exists()) Some(legacyPrior) else None)
         val node: com.fasterxml.jackson.databind.node.ObjectNode =
           srcFile match {
             case None => om.createObjectNode()

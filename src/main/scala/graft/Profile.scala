@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: decomposes a query's wall time into DataFrame
   * construction (analysis), job execution, and between-job driver gaps
-  * (planning/collect/scheduler latency), with per-job wall and task counts.
-  * Uses the SAME session configs as [[Bench]] so walls are comparable to the
-  * recorded bench numbers (TimeQuery intentionally omits them and reads ~4x
-  * slower at sf0.1 — see BENCH_NOTES.md r12).
+  * (planning/collect/scheduler latency), with per-job wall and task counts
+  * and per-rep shuffle-write MB.
+  * Runs on [[GraftSession]] with the same warm-up as [[Bench]], so walls are
+  * comparable to the recorded bench numbers.
   *
   * Usage: `runMain graft.Profile <sfDir> <queryName> [reps]`
   */
@@ -18,20 +17,11 @@ object Profile {
     val (sfDir, name) = (args(0), args(1))
     val reps = if (args.length > 2) args(2).toInt else 2
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     final case class JobRec(id: Int, start: Long, var end: Long = 0L,
-        var stages: Int = 0, var tasks: Int = 0, var desc: String = "")
+        var stages: Int = 0, var tasks: Int = 0, var shuffleBytes: Long = 0L,
+        var desc: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
     val order = java.util.Collections.synchronizedList(new java.util.ArrayList[Int])
@@ -51,15 +41,13 @@ object Profile {
         val r = jobs.get(jid)
         if (r != null) {
           r.stages += 1; r.tasks += e.stageInfo.numTasks
+          r.shuffleBytes += e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
           if (e.stageInfo.numTasks > 1 || r.desc.isEmpty) r.desc = e.stageInfo.name
         }
       }
     })
 
-    // same warmup as Bench
-    spark.range(1000000).groupBy(org.apache.spark.sql.functions.col("id") % 10)
-      .count().collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    GraftSession.warm(spark, sfDir)
 
     (0 until reps).foreach { rep =>
       jobs.clear(); order.clear(); stageToJob.clear()
@@ -70,6 +58,8 @@ object Profile {
       val n = df.count()
       val t2 = System.nanoTime()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      // listener events are async; give them a beat before reading
+      Thread.sleep(300)
       val wall = (t2 - t0) / 1e9
       val build = (t1 - t0) / 1e9
       import scala.jdk.CollectionConverters._
@@ -94,7 +84,7 @@ object Profile {
       val gapTotal = wall - build - covered
       println(f"[$name rep$rep] wall=$wall%.3f build=$build%.3f " +
         f"jobs=${recs.size} jobWall=$jobWall%.3f covered=$covered%.3f " +
-        f"gaps=$gapTotal%.3f rows=$n")
+        f"gaps=$gapTotal%.3f shuffleMB=${recs.map(_.shuffleBytes).sum / 1e6}%.1f rows=$n")
       if (rep == reps - 1 || sys.env.contains("PROFILE_ALL_REPS")) {
         recs.foreach { r =>
           println(f"  job ${r.id}%4d ${(r.end - r.start) / 1e6}%8.1fms " +

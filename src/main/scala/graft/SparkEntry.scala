@@ -63,27 +63,21 @@ object SparkEntry {
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Build + eagerly pin several independent frames CONCURRENTLY (guide
-    * §2.6 — the q_resident_parity pattern: each localCheckpoint is a
-    * multi-stage job whose tail leaves cores idle, so overlapping them
-    * backfills the box; Dataset construction from worker threads is safe
-    * when the calling thread is not mid-analysis). Used by the
-    * parity/diff queries whose `a.exceptAll(b) ∪ b.exceptAll(a)` shape
-    * would otherwise evaluate every search subtree TWICE inside one huge
-    * union plan (verdict r15 #3): pinning each search once makes the diff
-    * legs read the materialized rows.
+  /** Bound on concurrent query legs: a wedged leg fails its query with a
+    * clear error instead of hanging the harness.
     */
-  private def pinConcurrently(fns: (() => DataFrame)*): Seq[DataFrame] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fns.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    try {
-      val fs = fns.map(f => Future(f().localCheckpoint(true)))
-      fs.map(Await.result(_, Duration(10, "min")))
-    } finally pool.shutdown()
-  }
+  private val legTimeout = scala.concurrent.duration.Duration(10, "min")
+
+  /** Build + eagerly pin several independent frames CONCURRENTLY (see
+    * [[Concurrent]]: each localCheckpoint is a multi-stage job whose tail
+    * leaves cores idle). Used by the parity/diff queries whose
+    * `a.exceptAll(b) ∪ b.exceptAll(a)` shape would otherwise evaluate
+    * every search subtree TWICE inside one huge union plan (verdict r15
+    * #3): pinning each search once makes the diff legs read the
+    * materialized rows.
+    */
+  private def pinConcurrently(fns: (() => DataFrame)*): Seq[DataFrame] =
+    Concurrent.concurrently(legTimeout)(fns.map(f => () => f().localCheckpoint(true)): _*)
 
   /** Events table with `ts` normalized to TIMESTAMP regardless of how the
     * generator wrote it: epoch-nanos INT64 (read via nanosAsLong — Spark's
@@ -2569,35 +2563,16 @@ object SparkEntry {
       // r12: the fourth family — the IVF_PQ index's resident ADC+rerank
       // tier vs its distributed plan
       val pqRes = Ann.annSearchIndexPq(pq, qv, "vec_id", "embedding", k = 5, nProbe = 8)
-      // the four independent plan-leg searches run CONCURRENTLY (guide
-      // §2.6 — actions are only sequential because the driver calls them
-      // sequentially): each eager localCheckpoint is a multi-stage job
-      // whose tail leaves most cores idle, so overlapping them backfills
-      // the box. The resident-rows conf is set ONCE around the batch —
+      // the four independent plan-leg searches run CONCURRENTLY. The
+      // resident-rows conf is set ONCE around the batch —
       // the per-leg withPlan toggle would race across threads and could
       // silently hand a "plan" leg the resident path
-      val (bmPlan, mhPlan, anPlan, pqPlan) = withPlan {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        try {
-          val fs = Seq(
-            Future(Lexical.bm25SearchIndex(bmP, q, "qid", "text", k = 5)
-              .localCheckpoint(true)),
-            Future(Dedup.minhashSearchIndex(mhP, probe, "doc_id", "text", 0.8)
-              .localCheckpoint(true)),
-            Future(Ann.annSearchIndexInt8(annP, qv, "vec_id", "embedding",
-              k = 5, nProbe = 8).localCheckpoint(true)),
-            Future(Ann.annSearchIndexPq(pqP, qv, "vec_id", "embedding",
-              k = 5, nProbe = 8).localCheckpoint(true)))
-          // finite await (advisor r15): a wedged leg must fail the query
-          // with a clear error, not hang the harness forever on a
-          // non-daemon pool
-          val r = fs.map(Await.result(_, Duration(10, "min")))
-          (r(0), r(1), r(2), r(3))
-        } finally pool.shutdown()
+      val Seq(bmPlan, mhPlan, anPlan, pqPlan) = withPlan {
+        pinConcurrently(
+          () => Lexical.bm25SearchIndex(bmP, q, "qid", "text", k = 5),
+          () => Dedup.minhashSearchIndex(mhP, probe, "doc_id", "text", 0.8),
+          () => Ann.annSearchIndexInt8(annP, qv, "vec_id", "embedding", k = 5, nProbe = 8),
+          () => Ann.annSearchIndexPq(pqP, qv, "vec_id", "embedding", k = 5, nProbe = 8))
       }
       norm(diff(bmRes, bmPlan), "bm25", "query_id", "doc_id", "score")
         .unionByName(norm(diff(mhRes, mhPlan), "minhash", "corpus_id", "batch_id", "jaccard"))
@@ -4008,24 +3983,15 @@ object SparkEntry {
       val (mh, bm, av, ac) = steadyAuditRoots(s, dir)
       // the two audit phases are independent chains of small open jobs
       // (denylist pin + per-family tombstone collects); build them
-      // CONCURRENTLY from the query layer (guide §2.6 — the
-      // q_resident_parity pattern: Dataset construction from worker
-      // threads is safe when the calling thread is not mid-analysis; the
-      // analyzer-livelock constraint only binds the TVF twin, which stays
-      // sequential inside auditRemovals)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val (pre, post) = try {
-        val pf = Future(IndexMaintenance.auditRemovals(s, mh,
+      // CONCURRENTLY from the query layer (the analyzer-livelock
+      // constraint only binds the TVF twin, which stays sequential inside
+      // auditRemovals)
+      val Seq(pre, post) = Concurrent.concurrently(legTimeout)(
+        () => IndexMaintenance.auditRemovals(s, mh,
             minhashRoot = Some(mh), bm25Root = Some(bm), annRoot = Some(av))
-          .withColumn("phase", lit("pre")))
-        val qf = Future(IndexMaintenance.auditRemovals(s, mh, annRoot = Some(ac))
+          .withColumn("phase", lit("pre")),
+        () => IndexMaintenance.auditRemovals(s, mh, annRoot = Some(ac))
           .withColumn("phase", lit("post")))
-        (Await.result(pf, Duration(10, "min")), Await.result(qf, Duration(10, "min")))
-      } finally pool.shutdown()
       pre.unionByName(post).select(col("phase"), col("family"), col("id"))
         .orderBy("phase", "family", "id")
     }),

@@ -100,7 +100,6 @@ object Pq {
       while (i > 0) { val r = rnd.nextInt(i + 1); val t = idx(i); idx(i) = idx(r); idx(r) = t; i -= 1 }
       idx
     }
-    val subspaces = (0 until m).toVector
     val fitOne = (j: Int) => {
       val idx = initIdx(j)
       val cents = Array.tabulate(k, dsub)((c, d) => sample(idx(c))(j * dsub + d))
@@ -148,17 +147,8 @@ object Pq {
         c += 1
       }
     }
-    if (m == 1) fitOne(0)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(m, Runtime.getRuntime.availableProcessors()))
-      try {
-        import scala.jdk.CollectionConverters._
-        val futures = pool.invokeAll(
-          subspaces.map(j => (() => { fitOne(j); null }): java.util.concurrent.Callable[Null]).asJava)
-        futures.asScala.foreach(_.get()) // propagate any fit failure
-      } finally pool.shutdown()
-    }
+    graft.Concurrent.concurrently(scala.concurrent.duration.Duration(10, "min"))(
+      (0 until m).map(j => () => fitOne(j)): _*)
     PqCodebook(m, k, dsub, flat)
   }
 

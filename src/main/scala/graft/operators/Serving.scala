@@ -19,8 +19,8 @@ object Serving {
   // and in the per-family search entry points; [[ServingSession]] adds the
   // generation-following lifecycle on top.
 
-  /** Where the serving wall actually goes, measured (r10, `ServingProbe`
-    * with PROBE_STEADY on the bench box): an EMPTY one-task job
+  /** Where the serving wall actually goes, measured (r10, a steady-state
+    * per-search job census on the bench box): an EMPTY one-task job
     * (`spark.range(1).count()`) costs 0.06–0.08 s — the local-mode
     * scheduler round-trip floor every 1-job search pays before any data is
     * touched. Against that floor the per-search walls decompose as

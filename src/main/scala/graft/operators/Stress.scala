@@ -456,7 +456,7 @@ object Stress {
     * row per epoch with the batch/survivor census, the growing MinHash
     * union fan-in, committed batch counts on all three indexes, and the
     * Spark JOB count the epoch cost (read after a listener-bus quiesce —
-    * the ServingProbe async caveat). Value semantics are gated by the
+    * listener events post asynchronously). Value semantics are gated by the
     * hash-green 1x ingest legs (q_stream_ingest, q_stream_ingest_bm25,
     * q_stream_ingest_ann). The census makes the append-accumulation cost
     * OBSERVABLE: jobs/epoch grows ~+5 with every committed batch (each

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Stress}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dictates, and the stress leg's census must equal the base census at
   * multiplied counts.
   */
-class AnnIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnnIndexSpec extends AnyFunSuite with LocalSession {
 
   private def emb(n: Int, dim: Int = 16): DataFrame = {
     import spark.implicits._

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Lexical
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * crash-window invisibility, empty/blank-batch degeneracy, non-in-place
   * compact).
   */
-class Bm25AppendSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Bm25AppendSpec extends AnyFunSuite with LocalSession {
 
   /** Deterministic multi-term docs over a small vocabulary so query terms
     * hit many documents (df > 1 everywhere — the stats that must merge).

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dsir
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * above off-target ones, zero-weight tokenless docs, stay deterministic
   * under repartitioning, and select with scale-safe plans.
   */
-class DsirSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DsirSpec extends AnyFunSuite with LocalSession {
 
   // two disjoint vocabularies: "code" docs vs "news" docs
   private def corpus = {

@@ -4,7 +4,6 @@ import graft.core.{Keys, Serialize}
 import graft.embed.HashEmbedder
 import graft.llm.Llm
 import graft.operators._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (reference: tests/infer_test.py, tests/merge_knn_llm_test.py) plus unit
   * checks for the engine's own primitives.
   */
-class EngineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class EngineSpec extends AnyFunSuite with LocalSession {
 
   lazy val emb = new HashEmbedder(32)
 

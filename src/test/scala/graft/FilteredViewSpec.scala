@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Lexical}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,13 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * index whose df is recomputed in-plan (the recompute must see the
   * UNFILTERED postings or df silently becomes subset-df).
   */
-class FilteredViewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FilteredViewSpec extends AnyFunSuite with LocalSession {
 
   private def docs(ids: Range): DataFrame = {
     import spark.implicits._

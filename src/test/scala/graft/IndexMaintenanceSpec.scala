@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Ann, Dedup, IndexMaintenance, Lexical, Tombstones}
 import graft.operators.IndexMaintenance.{Policy, currentPath, genPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly-once across a swap, and the ANN refit watermark surviving
   * compactions.
   */
-class IndexMaintenanceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IndexMaintenanceSpec extends AnyFunSuite with LocalSession {
 
   private def doc(tag: Any) =
     s"$tag alpha $tag beta $tag gamma $tag delta $tag epsilon $tag zeta"

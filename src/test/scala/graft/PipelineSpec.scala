@@ -6,7 +6,7 @@ import graft.operators.{Multimodal, SemanticJoin}
 import graft.sources.Io
 import graft.streaming.StreamOps
 import graft.train.{CentroidAdjustedEmbedder, CentroidFitter, ModelArtifact, TrainConfig, TrainPrep}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Specs for the pipeline modules: train prep, provider routing, multimodal
   * plumbing, streaming ops, and IO wrappers.
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with LocalSession {
 
   lazy val emb = new HashEmbedder(32)
 

@@ -2,21 +2,14 @@ package graft
 
 import graft.operators.SemanticJoin
 import graft.plans.{GraftPlans, SemanticTopKJoin, SemanticTopKJoinExec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Catalyst-native semantic join: logical node → strategy → physical
   * broadcast exec, the SQL table function, and the left-id pushdown rule.
   */
-class PlansSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PlansSpec extends AnyFunSuite with LocalSession {
 
   private def vecs(n: Int, dim: Int = 8): DataFrame = {
     import spark.implicits._

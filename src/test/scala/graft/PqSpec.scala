@@ -1,20 +1,14 @@
 package graft
 
 import graft.operators.{Ann, Pq, VecScan}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Product quantization: deterministic training, exact ADC algebra, recall
   * against brute force, and the broadcast guard.
   */
-class PqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqSpec extends AnyFunSuite with LocalSession {
 
   private def emb(n: Int, dim: Int = 16): DataFrame = {
     import spark.implicits._
@@ -29,6 +23,9 @@ class PqSpec extends AnyFunSuite {
     val b = Pq.pqTrain(e, "vec_id", "embedding", m = 4, ks = 16, sampleRows = 128, iters = 4)
     assert(a.m === 4 && a.ks === 16 && a.dsub === 4 && a.dim === 16)
     assert(a.flat.toSeq === b.flat.toSeq, "same inputs must give the same codebook")
+    // pinned against the sequential-era fit: a change to how the per-subspace
+    // Lloyd loops are scheduled must not move a single bit of the codebook
+    assert(java.util.Arrays.hashCode(a.flat) === 309231081, "codebook drifted from the pinned fit")
     // sample smaller than ks: ks degrades, shape stays consistent
     val tiny = Pq.pqTrain(emb(5), "vec_id", "embedding", m = 4, ks = 16, sampleRows = 8)
     assert(tiny.ks === 5 && tiny.flat.length === 4 * 5 * 4)

@@ -3,7 +3,6 @@ package graft
 import graft.core.Serialize
 import graft.functions.TopKBuffer
 import graft.llm.Llm
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DataFrame-level properties as one-job batch checks over generated data
   * (per-case Spark jobs would be 100× slower for the same coverage).
   */
-class PropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PropertySpec extends AnyFunSuite with LocalSession {
 
   private def check(p: Prop, minTests: Int = 100): Unit = {
     val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(minTests), p)

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.Int8Kernels
 import graft.operators.{Ann, Quantize, SemanticJoin}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bound, the exact integer kernel, and the coarse+rerank search contract
   * against exact brute force.
   */
-class QuantizeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuantizeSpec extends AnyFunSuite with LocalSession {
 
   private def vecs(n: Int, dim: Int): org.apache.spark.sql.DataFrame = {
     import spark.implicits._

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Resident
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * score DOUBLES by bit pattern), fire only under the gate (pinned +
   * bounded), and cost ZERO Spark jobs per search.
   */
-class ResidentSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ResidentSpec extends AnyFunSuite with LocalSession {
 
   private def docs(n: Int, from: Int = 0): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}

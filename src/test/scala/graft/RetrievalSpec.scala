@@ -1,19 +1,12 @@
 package graft
 
 import graft.operators.Retrieval
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reciprocal-rank fusion: hand-computed values, ordering, tie-breaks, and
   * partition invariance of the ordered fold.
   */
-class RetrievalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RetrievalSpec extends AnyFunSuite with LocalSession {
 
   test("rrfFuse: hand-computed fusion of two systems") {
     import spark.implicits._

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Sampling
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * degraded band branches) and check the scale shape (the window runs over
   * the band, not the group).
   */
-class SamplingSketchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SamplingSketchSpec extends AnyFunSuite with LocalSession {
 
   private def kept(df: DataFrame): Seq[Long] =
     df.select("id").collect().map(_.getLong(0)).toSeq.sorted

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,13 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with a bounded quiesce for the async listener bus. A regression in any
   * of the structural properties above shows up here as a second job.
   */
-class ServingJobsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServingJobsSpec extends AnyFunSuite with LocalSession {
 
   private val jobCount = new java.util.concurrent.atomic.AtomicLong
   private lazy val listener = {

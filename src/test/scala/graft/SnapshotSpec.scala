@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Dedup, IndexMaintenance, Lexical, Snapshots, Tombstones}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * while the snapshot lives and collect it on the first pass after `drop`;
   * a violated pin REFUSES to open rather than serving a partial view.
   */
-class SnapshotSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotSpec extends AnyFunSuite with LocalSession {
 
   private def docs(n: Int, from: Int = 0): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}

@@ -3,7 +3,7 @@ package graft
 import graft.operators.{Dedup, IndexMaintenance, Lexical, ServingSession, Snapshots, Tombstones}
 import graft.operators.IndexMaintenance.{Policy, currentPath, genPath}
 import graft.streaming.{Denylist, StreamOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * taken-down docs out of later ingest epochs via the root-level
   * [[Denylist]].
   */
-class StreamTakedownSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamTakedownSpec extends AnyFunSuite with LocalSession {
 
   private def doc(tag: Any) =
     s"$tag alpha $tag beta $tag gamma $tag delta $tag epsilon $tag zeta"

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Stress
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stays shuffle-free up to the summary; no leg collects the multiplied
   * relation to the driver).
   */
-class StressSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StressSpec extends AnyFunSuite with LocalSession {
 
   private def emb(n: Int): DataFrame = {
     import spark.implicits._

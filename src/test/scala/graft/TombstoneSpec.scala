@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ann, Dedup, IndexMaintenance, Lexical, Tombstones}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tombstones physically and ledgers them; the maintenance loop compacts on
   * the delete-fraction signal.
   */
-class TombstoneSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TombstoneSpec extends AnyFunSuite with LocalSession {
 
   private def docs(n: Int, from: Int = 0): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
